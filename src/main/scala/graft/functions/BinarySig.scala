@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * `cos(pi * hamming / dim)`. 32x smaller than the f32 vector
   * (1024 dims: 4 KB -> 128 B), which is the coarse-scan storage lever at
   * corpus scale; exact float vectors stay the rerank source of truth
-  * (same labeled-contract posture as the int8 tier,
-  * [[graft.operators.QuantizedMatrixStore]]).
+  * (same labeled-contract posture as the int8 codec,
+  * [[graft.operators.MatrixStore.Codec.Int8]]; the block store's sign-bit
+  * codec, [[graft.operators.MatrixStore.Codec.Sign]], packs this scheme).
   *
   * The reference scans raw f32 only (/root/reference/src/lib.rs:321-344);
   * this is north-star scope. Codegen for the same reason as [[VectorDot]]:

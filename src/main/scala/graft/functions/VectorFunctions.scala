@@ -69,13 +69,4 @@ object VectorFunctions {
     * lambda must not re-evaluate an aggregate over the whole array). */
   def normalizeD(v: Column, norm: Column): Column =
     transform(v, x => x.cast("double") / norm)
-
-  /** Normalize and keep FLOAT element type — the stored-vector layout
-    * (reference stores a normalized f32 matrix, lib.rs:44-45). */
-  def normalizeF(v: Column, norm: Column): Column =
-    transform(v, x => (x.cast("double") / norm).cast("float"))
-
-  /** f32-accumulating dot product — reference parity (lib.rs:330-343). */
-  def dotF(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0f), (acc, x) => acc + x)
 }

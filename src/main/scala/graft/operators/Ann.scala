@@ -924,7 +924,7 @@ object Ann {
   /** Sign-bit signature table for a vector column: (id STRING, sig
     * ARRAY<BIGINT>) via [[graft.functions.SignPack]] on the normalized
     * vector — dim/8 bytes per row, the 32x-compressed coarse artifact
-    * of the binary scan tier ([[BinaryMatrixStore]]) as a persistable
+    * of the binary scan tier ([[MatrixStore.Codec.Sign]]) as a persistable
     * DataFrame. At corpus scale this is the table the nomination pass
     * scans INSTEAD of the vectors: 100 TB of 1024-dim f32 signatures
     * down to ~3 TB. */
@@ -945,7 +945,8 @@ object Ann {
     * emitted schema and exact-score contract as [[bruteForceTopK]];
     * what is approximate is nomination only (recall floor spec-pinned,
     * committed in BENCH_LOCAL). The DataFrame twin of
-    * [[BinaryMatrixStore]], for when queries are a table, not a call.
+    * [[MatrixStore]]'s sign-bit codec ([[BinaryMatrixStore.fromStore]]),
+    * for when queries are a table, not a call.
     *
     * Sizing note: the serving tier nominates k·oversample PER SLAB and
     * unions, while this plan keeps ONE deterministic global
@@ -2548,16 +2549,6 @@ object Ann {
       maxFiles: Int = 8): Seq[String] = {
     recoverMaintain(spark, path)
     compactDirs(spark, s"$path/lists", maxFiles)
-  }
-
-  /** Compact a persisted residual IVF×PQ layout ([[ivfPqSave]]): both
-    * cluster-partitioned halves (codes + coarse lists) repay their
-    * append debt together. */
-  def ivfPqCompactSave(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFiles: Int = 8): Seq[String] = {
-    recoverMaintain(spark, path)
-    (compactDirs(spark, s"$path/codes", maxFiles) ++
-      compactDirs(spark, s"$path/ivf/lists", maxFiles)).distinct.sorted
   }
 
   /** Sweep crash residue left by an interrupted [[compactDirs]] or

@@ -2,7 +2,9 @@ package graft.operators
 
 /** Common serving+maintenance surface of the in-process graph tiers —
   * [[HnswReplica]] (one graph) and [[HnswShards]] (id-hash sharded
-  * graphs, parallel fan-out). The streaming ingestion/tombstone twins
+  * graphs, parallel fan-out) — and, through
+  * [[LocalMatrixStore.maintainable]], the block store's replica under any
+  * codec. The streaming ingestion/tombstone twins
   * (graft.streaming.StreamingOps.upsertStreamWithHnsw /
   * tombstoneStreamHnsw) program against this trait, so the full
   * stream-to-serving loop works identically on either tier. */

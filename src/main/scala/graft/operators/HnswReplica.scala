@@ -3,7 +3,8 @@ package graft.operators
 import java.util.concurrent.atomic.AtomicReference
 
 /** In-process HNSW graph over a serving replica's vectors — the
-  * approximate sibling of [[LocalMatrixStore]]'s exact scan.
+  * approximate sibling of [[LocalMatrixStore]]'s block scan (built by
+  * [[LocalMatrixStore.toHnsw]]).
   *
   * [[LocalMatrixStore]] answers a top-k in O(N·d): every query reads
   * the full slab. That is the reference's own design (a brute-force

@@ -2649,43 +2649,6 @@ object InvertedIndex {
       .limit(k)
   }
 
-  /** [[suggestTerms]] for a query BATCH — prefixes as a DATA column,
-    * nothing query-sized through the driver: the vocab-sized dictionary
-    * joins the broadcast prefix frame on the startsWith theta predicate
-    * (a prefix cannot hash-prune, so vocab × |batch| comparisons in ONE
-    * pass is the honest plan), and the bounded-heap
-    * [[graft.functions.TopKByScore]] reduces to k rows per query — df
-    * DESC, term ASC ties, exactly [[suggestTerms]]' order. Prefixes
-    * fold through the sidecar's analyzer in-plan; a prefix that
-    * analyzes to more than one token has no single-token dictionary
-    * contract, and the batch FAILS FAST on it (bounded probe — no
-    * silent drops). Emits (qid, rank, term, df). */
-  def suggestTermsBatch(spark: SparkSession, path: String,
-      queries: DataFrame, qidCol: String, prefixCol: String,
-      k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val st = readStats(spark, path)
-    import spark.implicits._
-    val q = queries.select(col(qidCol).cast(StringType).as("qid"),
-      TextAnalysis.tokens(col(prefixCol).cast(StringType), st.analyzer)
-        .as("__toks__"))
-    val dirty = q.filter(size(col("__toks__")) =!= 1)
-      .select(col("qid")).limit(5).collect().map(_.getString(0))
-    require(dirty.isEmpty,
-      s"prefix(es) of ${dirty.mkString("[", ", ", "]")} analyze to more " +
-        s"than one token under the index's '${st.analyzer}' analyzer — " +
-        "a prefix must be a single token")
-    val p = q.select(col("qid"), element_at(col("__toks__"), 1).as("__p__"))
-    termDictionary(spark, path)
-      .join(broadcast(p), col("term").startsWith(col("__p__")))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKByScore.topk(
-        col("df").cast(DoubleType), col("term"), k).as("hits"))
-      .select(col("qid"), posexplode(col("hits")).as(Seq("rank0", "hit")))
-      .select(col("qid"), (col("rank0") + 1).cast(IntegerType).as("rank"),
-        col("hit.id").as("term"), col("hit.score").cast(LongType).as("df"))
-  }
-
   /** "DID YOU MEAN" spell correction: the k best dictionary corrections
     * for a (possibly misspelled) query term, ranked the Lucene way —
     * smallest edit distance first, then highest document frequency,

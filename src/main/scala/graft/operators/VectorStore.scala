@@ -234,8 +234,6 @@ final case class VectorStore(
   /** Record count (lib.rs:306-308). */
   def len(): Long = df.count()
   def isEmpty: Boolean = df.isEmpty
-  /** Total stored vector elements = N * dim (lib.rs:314-318). */
-  def vectorElemCount(): Long = len() * embeddingDim
 
   // ------------------------------------------------------------------- O8
   /** Persist natively: partitioned parquet + a small JSON sidecar carrying

@@ -1067,7 +1067,10 @@ object StreamingOps {
     * [[graft.operators.HnswReplica]]'s concurrency contract). The
     * batch collect is batch-sized and lands on the driver because the
     * graph replica is driver-local by design — the same justified
-    * seam as `LocalMatrixStore.refresh`. */
+    * seam as `LocalMatrixStore.refresh`. Any
+    * [[graft.operators.HnswMaintainable]] works here, including a block
+    * store replica's overlay through
+    * [[graft.operators.LocalMatrixStore.maintainable]]. */
   def upsertStreamWithHnsw(batches: DataFrame, storePath: String,
       hnsw: graft.operators.HnswMaintainable): StreamingQuery =
     batches.writeStream

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.BinarySig
-import graft.operators.{Ann, BinaryMatrixStore, MatrixStore, VectorStore}
+import graft.operators.{Ann, BinaryMatrixStore, MatrixStore, QuantizedMatrixStore, VectorStore}
 
 class BinaryTierSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -68,6 +68,13 @@ class BinaryTierSpec extends AnyFunSuite {
         viaLocal.foreach { case (id, s) => assert(exactAll(id) == s, s"query $i id $id score") }
         val exactTop = exactLocal.query(q, 10).map(_._1).toSet
         recalled += viaLocal.count(p => exactTop.contains(p._1)); total += 10
+        // inclusive threshold: local == distributed, every score clears
+        // it and is the id's exact f32 score
+        val thr = exactLocal.query(q, 5).last._2
+        val above = blocal.query(q, 10, betterThan = Some(thr)).toSeq
+        assert(above == bmx.query(q, 10, betterThan = Some(thr)).toSeq, s"query $i thr vs distributed")
+        assert(above.nonEmpty && above.forall { case (id, sc) => sc >= thr && sc == exactAll(id) },
+          s"query $i thr scores")
       }
       assert(recalled.toDouble / total >= 0.8,
         s"binary tier recall@10 ${recalled.toDouble / total} under floor at oversample 16")
@@ -76,11 +83,11 @@ class BinaryTierSpec extends AnyFunSuite {
       val allowed = st.df.filter(col("label") === 3)
         .select(col("__id__")).collect().map(_.getString(0)).toSet
       val q0 = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
-      val filtered = blocal.query(q0, 5, oversample = 16, Some(allowed))
+      val filtered = blocal.query(q0, 5, oversample = 16, allowedIds = Some(allowed))
       assert(filtered.nonEmpty && filtered.forall(p => allowed.contains(p._1)))
       val exactFiltered = exactLocal.query(q0, Int.MaxValue, None, Some(allowed)).toMap
       filtered.foreach { case (id, s) => assert(exactFiltered(id) == s) }
-      assert(bmx.query(q0, 5, oversample = 16, Some(allowed)).toSeq == filtered.toSeq)
+      assert(bmx.query(q0, 5, oversample = 16, allowedIds = Some(allowed)).toSeq == filtered.toSeq)
     } finally { mx.unpersist(); bmx.unpersist() }
   }
 
@@ -89,35 +96,41 @@ class BinaryTierSpec extends AnyFunSuite {
     val st = VectorStore.fromDataFrame(e, "vec_id", "embedding", 64)
     val mx = MatrixStore.fromStore(st)
     val exactLocal = mx.toLocal()
-    val bmx = BinaryMatrixStore.fromStore(st)
-    val blocal = bmx.toLocal()
-    try {
-      val q0 = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
-      val before = blocal.nRows
-      // tombstone: gone immediately, nRows drops
-      blocal.markDeleted(Seq("0"))
-      assert(blocal.query(q0, 10).forall(_._1 != "0"))
-      assert(blocal.nRows == before - 1 && blocal.nTombstones == 1)
-      // re-add after delete: answers again with the exact score
-      blocal.add(Seq("0" -> q0))
-      val hit = blocal.query(q0, 1).head
-      assert(hit._1 == "0" && hit._2 == exactLocal.query(q0, 1).head._2)
-      assert(blocal.nRows == before)
-      // upsert shadows the slab copy: give id 5 the id-0 vector; both now
-      // rank at the top, and the old id-5 vector stops answering for it
-      blocal.add(Seq("5" -> q0))
-      assert(blocal.query(q0, 2).map(_._1).toSet == Set("0", "5"))
-      assert(blocal.nRows == before, "upsert must not change the row count")
-      // the HnswMaintainable adapter shares this state and maps ef->oversample
-      val m = blocal.maintainable
-      assert(m.nRows == before)
-      assert(m.query(q0, 2, ef = 16, betterThan = None, allowedIds = None)
-        .map(_._1).toSet == Set("0", "5"))
-      m.markDeleted(Seq("5"))
-      assert(blocal.query(q0, 2).map(_._1) sameElements Array("0",
-        blocal.query(q0, 2)(1)._1))
-      assert(blocal.query(q0, 10).forall(_._1 != "5"))
-    } finally { mx.unpersist(); bmx.unpersist() }
+    // the overlay is shared by every replica: run it on f32, int8 and bq
+    Seq[(String, VectorStore => MatrixStore)]("f32" -> MatrixStore.fromStore,
+        "int8" -> QuantizedMatrixStore.fromStore, "bq" -> BinaryMatrixStore.fromStore)
+      .foreach { case (tier, build) => withClue(s"$tier: ") {
+        val bmx = build(st)
+        val blocal = bmx.toLocal()
+        try {
+          val q0 = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
+          val before = blocal.nRows
+          // tombstone: gone immediately, nRows drops
+          blocal.markDeleted(Seq("0"))
+          assert(blocal.query(q0, 10).forall(_._1 != "0"))
+          assert(blocal.nRows == before - 1 && blocal.nTombstones == 1)
+          // re-add after delete: answers again with the exact score
+          blocal.add(Seq("0" -> q0))
+          val hit = blocal.query(q0, 1).head
+          assert(hit._1 == "0" && hit._2 == exactLocal.query(q0, 1).head._2)
+          assert(blocal.nRows == before)
+          // upsert shadows the slab copy: give id 5 the id-0 vector; both now
+          // rank at the top, and the old id-5 vector stops answering for it
+          blocal.add(Seq("5" -> q0))
+          assert(blocal.query(q0, 2).map(_._1).toSet == Set("0", "5"))
+          assert(blocal.nRows == before, "upsert must not change the row count")
+          // the HnswMaintainable adapter shares this state and maps ef->oversample
+          val m = blocal.maintainable
+          assert(m.nRows == before)
+          assert(m.query(q0, 2, ef = 16, betterThan = None, allowedIds = None)
+            .map(_._1).toSet == Set("0", "5"))
+          m.markDeleted(Seq("5"))
+          assert(blocal.query(q0, 2).map(_._1) sameElements Array("0",
+            blocal.query(q0, 2)(1)._1))
+          assert(blocal.query(q0, 10).forall(_._1 != "5"))
+        } finally bmx.unpersist()
+      } }
+    mx.unpersist()
   }
 
   test("bqTopKBatch: full-corpus oversample equals brute force exactly") {

@@ -1405,9 +1405,9 @@ class VectorStoreSpec extends AnyFunSuite {
         .select(col("__id__")).collect().map(_.getString(0)).toSet
       qs.foreach { case (qid, v) =>
         val expect = mx.query(v, 5, None, Some(allowed)).toSeq
-        assert(qmx.query(v, 5, oversample = 8, Some(allowed)).toSeq == expect,
+        assert(qmx.query(v, 5, oversample = 8, allowedIds = Some(allowed)).toSeq == expect,
           s"qid $qid int8 distributed")
-        assert(qlocal.query(v, 5, oversample = 8, Some(allowed)).toSeq == expect,
+        assert(qlocal.query(v, 5, oversample = 8, allowedIds = Some(allowed)).toSeq == expect,
           s"qid $qid int8 replica")
       }
       // filtered batch with threshold agrees too
@@ -1435,6 +1435,14 @@ class VectorStoreSpec extends AnyFunSuite {
         // for every id both return (on this fixture nomination recalls
         // the full top-10, so the whole ranking matches)
         assert(viaLocal == exactLocal.query(q, 10).toSeq, s"query $i vs exact replica")
+        // inclusive threshold: local == distributed, every score clears
+        // it and is the id's exact f32 score
+        val thr = exactLocal.query(q, 5).last._2
+        val above = qlocal.query(q, 10, betterThan = Some(thr)).toSeq
+        assert(above == qmx.query(q, 10, betterThan = Some(thr)).toSeq, s"query $i thr vs distributed")
+        val exactAll = exactLocal.query(q, Int.MaxValue).toMap
+        assert(above.nonEmpty && above.forall { case (id, sc) => sc >= thr && sc == exactAll(id) },
+          s"query $i thr scores")
       }
     } finally { mx.unpersist(); qmx.unpersist() }
   }
